@@ -94,7 +94,7 @@ class Spec:
 
 PRESETS = {
     # the reference fleet of 10 devices at 1 reading/device/s
-    "backfill": Spec(n_devices=10, interval_s=1, backlog_s=1800, lines_per_file=4_500),
+    "backfill": Spec(n_devices=10, interval_s=1, backlog_s=3 * 3600, lines_per_file=4_500),
     # a larger fleet at 1 reading/device/min: 1 h of history, then
     # 5-minute ticks
     "fleet": Spec(
@@ -178,13 +178,14 @@ def _part(rng, devices, t0_us: int, span_s: int, interval_s: int):
         n - 1, np.arange(n) + 1 + (rng.random(n) * 200).astype(np.int64)
     )
 
+    iso = np.char.add(np.datetime_as_string(ts_us.astype("datetime64[us]"), unit="us"), "Z")
     lines = []
     truth = []
     extra: dict[int, list[str]] = {}
     for i in range(n):
         d = devices[dev_idx[i]]
         k = kind[i]
-        ts = _iso(ts_us[i])
+        ts = str(iso[i])
         energy = f"{energy_mwh[i] // 1000}.{energy_mwh[i] % 1000:03d}"
         body = (
             f'"device_type": "{d["device_type"]}", "user_id": "{d["user_id"]}", '

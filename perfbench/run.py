@@ -12,8 +12,7 @@ against the generator's truth table outside the timed span.
 Workloads:
 
 * ``backfill``: a backlog of raw JSON goes through ingest, batch
-  bronze->silver and silver->gold; one drain is one operation, closed by
-  the dashboard KPI query that confirms the catch-up.
+  bronze->silver and silver->gold; one drain is one operation.
 * ``dashboard``: the dashboard query mix, round-robin, over the gold and
   silver that set-up built from the fleet history, in a fresh session.
 * ``fleet_ticks``: 5-minute ticks of fleet telemetry land in a watched
@@ -55,19 +54,18 @@ from measure import BatchListener, RssSampler, Tracer, overhead_ms  # noqa: E402
 # --- pinned session layout ---------------------------------------------
 CPUS = len(os.sched_getaffinity(0))
 SHUFFLE_PARTITIONS = 8
-# a fixed, pre-touched heap and few malloc arenas: the JVM's RSS then
-# does not depend on when G1 chose to grow the heap or on how many
-# glibc arenas its threads happened to create
+# a fixed heap size: how often G1 collects, and so the timings, then do
+# not depend on when it chose to grow the heap
 DRIVER_MEMORY = "1g"
-JVM_OPTIONS = "-Xms1g -XX:+AlwaysPreTouch"
-MALLOC_ARENA_MAX = "2"
+JVM_OPTIONS = "-Xms1g"
 SETUP_REPS = 3
 STREAM_TIMEOUT_S = 120
 TICK_TIMEOUT_S = 60.0  # a failed tick is ranked at this freshness
-MIN_OPS = {"backfill": 4, "fleet_ticks": 5, "dashboard": 7 * 5}
-# after each drain the client reads the KPI this often, as a dashboard
-# refreshing on a timer would: enough samples for a steady median
-KPI_REFRESHES = 3
+# backfill: one warm-up drain in a cold JVM, then the measured drains;
+# dashboard: rounds of the 7 queries, the first WARMUP_ROUNDS of them
+# in a fresh session only warm it up
+MIN_OPS = {"backfill": 3, "fleet_ticks": 5, "dashboard": 7 * 7}
+WARMUP_ROUNDS = 2
 QUERIES = (
     "kpi",
     "energy_by_device_type",
@@ -78,14 +76,6 @@ QUERIES = (
     "data_status",
 )
 SILVER_STEPS = ("parse", "clean", "dedup", "quality", "enrich", "windows")
-
-END_TO_END = {
-    "setup_s": "s",
-    "wall_s": "s",
-    "events_per_s": "events/s",
-    "query_p50_ms": "ms",
-    "peak_rss_mb": "MB",
-}
 
 
 def _median(xs):
@@ -117,6 +107,7 @@ class Bench:
         self.attempted = 0
         self.failed = 0
         self.boot_s: list[float] = []
+        self.heap_mb: list[float] = []
         self.layout: dict = {}
         self.layer: dict = {}
 
@@ -130,7 +121,6 @@ class Bench:
         self.stop_session()
         os.environ["SPARK_GRAFT_CPUS"] = str(cpus)
         os.environ["SPARK_DRIVER_MEMORY"] = DRIVER_MEMORY
-        os.environ["MALLOC_ARENA_MAX"] = MALLOC_ARENA_MAX
         t0 = time.perf_counter()
         self.spark = get_spark(
             f"perfbench-{self.args.workload}",
@@ -180,6 +170,16 @@ class Bench:
                 proc.wait(timeout=60)
             SparkContext._gateway = None
             SparkContext._jvm = None
+
+    def retained_heap(self) -> None:
+        """Record the driver JVM's heap in use after a full collection:
+        what the operation that just ended left behind (caches, leaks,
+        the status store), not garbage. Called between operations,
+        outside their timed spans."""
+        jvm = self.spark.sparkContext._jvm
+        jvm.System.gc()
+        used = jvm.java.lang.management.ManagementFactory.getMemoryMXBean()
+        self.heap_mb.append(used.getHeapMemoryUsage().getUsed() / (1024.0 * 1024.0))
 
     def _layout(self) -> dict:
         sc = self.spark.sparkContext
@@ -379,10 +379,9 @@ def setup(b: Bench, preset: str, history: bool) -> dict:
 def run_backfill(b: Bench) -> dict:
     m = setup(b, "backfill", history=False)
     truth = m["truth_db"]
-    want = truth.dashboard(0)
     events = m["parts"][0]["events"]
     raw = m["parts"][0]["path"]
-    walls, qms, untraced = [], [], []
+    walls, untraced = [], []
     t_end = time.perf_counter() + b.args.seconds
     i = 0
     min_ops = MIN_OPS["backfill"] + 2 * b.args.trace
@@ -397,32 +396,29 @@ def run_backfill(b: Bench) -> dict:
             b.silver_batch(bronze, silver, m["catalog"])
             b.gold(silver, gold_root)
             wall = time.perf_counter() - t0
-            errs, ms = output_errors(silver, gold_root, truth, 0), []
-            for _ in range(KPI_REFRESHES):
-                kpi, q_ms = b.query("kpi", silver, gold_root, want)
-                errs += check_query("kpi", kpi, want)
-                ms.append(q_ms)
+            cached_mb = _cached_mb(b.spark)
+            b.retained_heap()
+            errs = output_errors(silver, gold_root, truth, 0)
         except Exception:
             traceback.print_exc()
-            wall, ms, errs = None, [], ["exception"]
-        if b.record(f"drain {i}", errs) and not (b.args.trace and i == 0):
+            wall, errs = None, ["exception"]
+        if b.record(f"drain {i}", errs) and i > 0:  # drain 0 warms the JVM up
             (walls if traced or not b.args.trace else untraced).append(wall)
-            qms += ms
             if traced:
-                layer_counts(b, truth, bronze, silver, events, events)
+                layer_counts(b, truth, bronze, silver, events, events, cached_mb)
         last = d
         i += 1
     b.trace(False)
     if b.args.trace:
         b.layer["steps"] = silver_steps(b, os.path.join(last, "bronze"), m["catalog"])
         b.layer["overhead_pct"] = 100.0 * (_median(walls) / _median(untraced) - 1.0)
-        traced_extras(b, last, m["catalog"], want)
+        traced_extras(b, last, m["catalog"], truth.dashboard(0))
         b.layer["speedup"] = scaling(b, raw, m["catalog"]) / _median(untraced)
     return {
         "setup_s": m["setup_s"],
         "wall_s": _median(walls),
         "events_per_s": events / _median(walls) if walls else 0.0,
-        "query_ms": qms,
+        "query_ms": [],
         "op_walls": walls,
     }
 
@@ -436,6 +432,9 @@ def traced_extras(b: Bench, drain: str, catalog: str, want: dict) -> None:
     )
 
     silver, gold_root = os.path.join(drain, "silver"), os.path.join(drain, "gold")
+    # the dashboard is its own process: the silver that build_gold cached
+    # must not answer the queries' silver scans
+    b.spark.catalog.clearCache()
     b.trace(True)
     for name in QUERIES:
         got, _ms = b.query(name, silver, gold_root, want)
@@ -532,20 +531,19 @@ def silver_steps(b: Bench, bronze_path: str, catalog_path: str) -> dict:
         ],
     ):
         return {}
-    best = [float("inf")] * (len(SILVER_STEPS) + 1)
-    for rep in range(2):
-        for k, p in enumerate(prefixes):
-            t0 = time.perf_counter()
-            p.write.format("noop").mode("overwrite").save()
-            best[k] = min(best[k], time.perf_counter() - t0)
+    walls = []
+    for p in prefixes:
         t0 = time.perf_counter()
-        write_partitioned(prefixes[-1], os.path.join(WORK, f"steps{rep}"), mode="overwrite")
-        best[-1] = min(best[-1], time.perf_counter() - t0)
+        p.write.format("noop").mode("overwrite").save()
+        walls.append(time.perf_counter() - t0)
+    t0 = time.perf_counter()
+    write_partitioned(prefixes[-1], os.path.join(WORK, "steps"), mode="overwrite")
+    walls.append(time.perf_counter() - t0)
     # self time: each prefix minus the one before; the parquet write
     # minus the full prefix through the noop sink. A step cheaper than
     # the noise between two runs can read slightly negative.
     out, prev = {}, 0.0
-    for name, t in zip(SILVER_STEPS + ("write",), best):
+    for name, t in zip(SILVER_STEPS + ("write",), walls):
         out[name] = t - prev
         prev = t
     return out
@@ -567,7 +565,7 @@ def run_dashboard(b: Bench) -> dict:
     want = m["truth_db"].dashboard(0)
     if b.args.trace:
         n = m["parts"][0]["events"]
-        layer_counts(b, m["truth_db"], m["bronze"], m["silver"], n, n)
+        layer_counts(b, m["truth_db"], m["bronze"], m["silver"], n, n, _cached_mb(b.spark))
         b.layer["steps"] = silver_steps(b, m["bronze"], m["catalog"])
     # the reference's dashboard is its own process: start with no cache
     b.boot()
@@ -576,8 +574,7 @@ def run_dashboard(b: Bench) -> dict:
     rounds, untraced_rounds, cur = [], [], 0.0
     t_end = time.perf_counter() + b.args.seconds
     i = 0
-    min_ops = MIN_OPS["dashboard"] + 2 * len(QUERIES) * b.args.trace
-    while i < min_ops or time.perf_counter() < t_end or i % len(QUERIES):
+    while i < MIN_OPS["dashboard"] or time.perf_counter() < t_end or i % len(QUERIES):
         name = QUERIES[i % len(QUERIES)]
         rnd = i // len(QUERIES)
         traced = _traced(b, rnd)
@@ -592,9 +589,10 @@ def run_dashboard(b: Bench) -> dict:
             per_query[name].append(ms)
             cur += ms
         if name == QUERIES[-1]:
-            if not b.args.trace or traced:
+            b.retained_heap()
+            if traced or not b.args.trace and rnd >= WARMUP_ROUNDS:
                 rounds.append(cur / 1000.0)
-            elif rnd > 0:
+            elif b.args.trace and rnd > 0:
                 untraced_rounds.append(cur / 1000.0)
             cur = 0.0
         i += 1
@@ -612,18 +610,25 @@ def run_dashboard(b: Bench) -> dict:
 
 
 def layer_counts(
-    b: Bench, truth: Truth, bronze: str, silver: str, events: int, delivered: int
+    b: Bench,
+    truth: Truth,
+    bronze: str,
+    silver: str,
+    events: int,
+    delivered: int,
+    cached_mb: float,
 ) -> None:
     """Row and file counts for the per-layer metrics, read from disk after
     an operation, outside its timed span. ``events``: new events of one
-    operation; ``delivered``: all events ``bronze`` was built from."""
+    operation; ``delivered``: all events ``bronze`` was built from;
+    ``cached_mb``: what the session had cached when gold finished."""
     L = b.layer
     L["events"] = events
     L["rows_rejected"] = delivered - truth.written_rows(bronze)
     L["silver_rows"] = truth.written_rows(silver)
     L["bronze_files"] = _count_files(bronze)
     L["silver_files"] = _count_files(silver)
-    L["cached_mb"] = _cached_mb(b.spark)
+    L["cached_mb"] = cached_mb
 
 
 def run_fleet_ticks(b: Bench) -> dict:
@@ -647,6 +652,7 @@ def run_fleet_ticks(b: Bench) -> dict:
             kpi, ms = b.query("kpi", m["silver"], m["gold"], want)
             errs = check_query("kpi", kpi, want)
             f_s = time.perf_counter() - t0
+            b.retained_heap()
             errs += output_errors(m["silver"], m["gold"], truth, k)
         except Exception:
             traceback.print_exc()
@@ -660,7 +666,9 @@ def run_fleet_ticks(b: Bench) -> dict:
         k += 1
     if b.args.trace:
         delivered = m["parts"][0]["events"] + sum(tick_events)
-        layer_counts(b, truth, m["bronze"], m["silver"], _median(tick_events), delivered)
+        layer_counts(
+            b, truth, m["bronze"], m["silver"], _median(tick_events), delivered, _cached_mb(b.spark)
+        )
     return {
         "setup_s": m["setup_s"],
         "wall_s": _median(walls),
@@ -739,12 +747,12 @@ def per_layer(b: Bench) -> dict:
     return out
 
 
-def layer_unit(name: str) -> str:
-    if name.endswith("events_per_s"):
-        return "events/s"
-    suffix = name.rsplit("_", 1)[-1]
-    return {"s": "s", "ms": "ms", "mb": "MB", "pct": "%", "speedup": "ratio",
-            "amplification": "ratio"}.get(suffix, "count")
+def listed_units(trace: int) -> dict:
+    """Name -> unit of the metrics that ``BENCHMARK.json`` lists for this
+    mode: the end-to-end metrics untraced, the per-layer ones traced."""
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        spec = json.load(f)
+    return {m["name"]: m["unit"] for m in spec["per_layer" if trace else "end_to_end"]}
 
 
 def main(argv=None) -> int:
@@ -754,6 +762,7 @@ def main(argv=None) -> int:
     ap.add_argument("--seconds", type=float, default=20)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     args = ap.parse_args(argv)
+    units = listed_units(args.trace)
     import big_data_for_smart_houses_spark  # noqa: F401  (fail fast without the program)
 
     # everything the run writes, the JVM's and PySpark's temp files
@@ -778,15 +787,20 @@ def main(argv=None) -> int:
         f"operations attempted={b.attempted} failed={b.failed} "
         f"failed_ops_ratio={b.failed / max(1, b.attempted):.4f}"
     )
-    print(f"query_p90_ms {_p90(qms):.3f} ms over {len(qms)} queries")
     print("operation walls (s): " + " ".join(f"{w:.3f}" for w in r["op_walls"]))
-    print(f"peak rss by process (MB): {rss.peak_by_process}")
+    if qms:
+        print(
+            f"query_p50_ms {_median(qms):.3f} ms, query_p90_ms {_p90(qms):.3f} ms "
+            f"over {len(qms)} queries"
+        )
+        print("query latencies (ms): " + " ".join(f"{q:.1f}" for q in qms))
+    print("retained heap (MB): " + " ".join(f"{h:.1f}" for h in b.heap_mb))
+    print(f"peak_rss_mb {rss.peak_mb:.1f} MB, by process: {rss.peak_by_process}")
     if "freshness_s" in r:
         f = r["freshness_s"]
         print(f"freshness_p50_s {_median(f):.4f} s over {len(f)} ticks")
     if args.trace:
         metrics = per_layer(b)
-        units = {k: layer_unit(k) for k in metrics}
         with open(os.path.join(ROOT, f".perfbench_spans-{args.workload}.json"), "w") as f:
             json.dump(b.tracer.records(), f)
     else:
@@ -794,10 +808,10 @@ def main(argv=None) -> int:
             "setup_s": r["setup_s"],
             "wall_s": r["wall_s"],
             "events_per_s": r["events_per_s"],
-            "query_p50_ms": _median(qms),
-            "peak_rss_mb": rss.peak_mb,
+            "retained_heap_mb": _median(b.heap_mb),
         }
-        units = END_TO_END
+    if set(metrics) != set(units):
+        raise SystemExit(f"metrics {sorted(set(metrics) ^ set(units))} differ from BENCHMARK.json")
     for k, v in metrics.items():
         print(f"{k} {v:.6g} {units[k]}")
     print(

@@ -195,3 +195,12 @@ def test_written_outputs_are_read_from_disk(truth, tmp_path):
     )
     assert truth.written_rows(str(tmp_path / "silver")) == truth.silver_rows(0)
     assert check_gold(truth.written_gold_by_date(str(tmp_path / "gold")), truth.gold_by_date(0)) == []
+
+
+def test_per_layer_metrics_are_the_ones_benchmark_json_lists():
+    import argparse
+
+    import run
+
+    b = run.Bench(argparse.Namespace(workload="backfill", seed=1, seconds=1, trace=1))
+    assert set(run.per_layer(b)) == set(run.listed_units(1))
