@@ -94,7 +94,7 @@ class Spec:
 
 PRESETS = {
     # the reference fleet of 10 devices at 1 reading/device/s
-    "backfill": Spec(n_devices=10, interval_s=1, backlog_s=3 * 3600, lines_per_file=4_500),
+    "backfill": Spec(n_devices=10, interval_s=1, backlog_s=6 * 3600, lines_per_file=4_500),
     # a larger fleet at 1 reading/device/min: 1 h of history, then
     # 5-minute ticks
     "fleet": Spec(
@@ -109,6 +109,9 @@ PRESETS = {
 }
 # the dashboard reads the fleet's history
 PRESETS["dashboard"] = dataclasses.replace(PRESETS["fleet"], n_ticks=0)
+# the traced run's shorter backlog, for the drains that time the tracing
+# overhead and the single-core drain
+PRESETS["backfill_short"] = dataclasses.replace(PRESETS["backfill"], backlog_s=3600)
 
 
 def device_table(n_devices: int) -> list[dict]:

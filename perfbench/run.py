@@ -1,6 +1,6 @@
 """Medallion benchmark: backfill, fleet ticks and dashboard reads.
 
-    python3 perfbench/run.py --workload backfill --seed 1 --seconds 20 --trace 0
+    python3 perfbench/run.py --workload backfill --seed 1 --seconds 10 --trace 0
 
 Runs from the root of a checkout and drives the program's public entry
 points (``streaming.ingest``, ``plans.etl``, ``operators.analytics``,
@@ -61,11 +61,13 @@ JVM_OPTIONS = "-Xms1g"
 SETUP_REPS = 3
 STREAM_TIMEOUT_S = 120
 TICK_TIMEOUT_S = 60.0  # a failed tick is ranked at this freshness
-# backfill: one warm-up drain in a cold JVM, then the measured drains;
-# dashboard: rounds of the 7 queries, the first WARMUP_ROUNDS of them
-# in a fresh session only warm it up
-MIN_OPS = {"backfill": 3, "fleet_ticks": 5, "dashboard": 7 * 7}
-WARMUP_ROUNDS = 2
+# the fewest operations of a run: backfill drains, ticks and dashboard
+# rounds of the 7 queries. Nothing is left out as warm-up: a catch-up
+# after an outage starts a job of its own, and a dashboard a process of
+# its own, so users pay their warm-up. A backfill drain takes longer
+# than the --seconds of BENCHMARK.json, so a run makes one, in the JVM
+# that set-up started.
+MIN_OPS = {"backfill": 1, "fleet_ticks": 5, "dashboard": 8}
 QUERIES = (
     "kpi",
     "energy_by_device_type",
@@ -381,39 +383,24 @@ def run_backfill(b: Bench) -> dict:
     truth = m["truth_db"]
     events = m["parts"][0]["events"]
     raw = m["parts"][0]["path"]
-    walls, untraced = [], []
+    walls = []
+    b.trace(True)
     t_end = time.perf_counter() + b.args.seconds
     i = 0
-    min_ops = MIN_OPS["backfill"] + 2 * b.args.trace
-    while i < min_ops or time.perf_counter() < t_end:
+    while i < MIN_OPS["backfill"] or time.perf_counter() < t_end:
         d = os.path.join(WORK, f"drain{i}")
-        bronze, silver, gold_root = (os.path.join(d, x) for x in ("bronze", "silver", "gold"))
-        traced = _traced(b, i)
-        b.trace(traced)
-        try:
-            t0 = time.perf_counter()
-            b.ingest(raw, bronze, os.path.join(d, "ckpt"))
-            b.silver_batch(bronze, silver, m["catalog"])
-            b.gold(silver, gold_root)
-            wall = time.perf_counter() - t0
-            cached_mb = _cached_mb(b.spark)
-            b.retained_heap()
-            errs = output_errors(silver, gold_root, truth, 0)
-        except Exception:
-            traceback.print_exc()
-            wall, errs = None, ["exception"]
-        if b.record(f"drain {i}", errs) and i > 0:  # drain 0 warms the JVM up
-            (walls if traced or not b.args.trace else untraced).append(wall)
-            if traced:
+        wall, cached_mb = checked_drain(b, raw, f"drain{i}", m["catalog"], truth, heap=True)
+        if wall is not None:
+            walls.append(wall)
+            if b.args.trace:
+                bronze, silver = os.path.join(d, "bronze"), os.path.join(d, "silver")
                 layer_counts(b, truth, bronze, silver, events, events, cached_mb)
-        last = d
         i += 1
     b.trace(False)
     if b.args.trace:
-        b.layer["steps"] = silver_steps(b, os.path.join(last, "bronze"), m["catalog"])
-        b.layer["overhead_pct"] = 100.0 * (_median(walls) / _median(untraced) - 1.0)
-        traced_extras(b, last, m["catalog"], truth.dashboard(0))
-        b.layer["speedup"] = scaling(b, raw, m["catalog"]) / _median(untraced)
+        b.layer["steps"] = silver_steps(b, os.path.join(d, "bronze"), m["catalog"])
+        traced_extras(b, d, m["catalog"], truth.dashboard(0))
+        overhead_and_scaling(b, m["catalog"])
     return {
         "setup_s": m["setup_s"],
         "wall_s": _median(walls),
@@ -421,6 +408,67 @@ def run_backfill(b: Bench) -> dict:
         "query_ms": [],
         "op_walls": walls,
     }
+
+
+def overhead_and_scaling(b: Bench, catalog: str) -> None:
+    """Diagnostics of the traced backfill run, on a 1-hour backlog: the
+    tracing overhead, from drains traced and untraced in ABBA order after
+    an untimed first drain of that backlog, and the speed-up of
+    ``local[nproc]`` over ``local[1]``. Their spans and batches are kept
+    out of the layer metrics."""
+    short = gen.generate(os.path.join(WORK, "short"), b.args.seed, gen.PRESETS["backfill_short"])
+    truth = Truth(short["truth"])
+    raw = short["parts"][0]["path"]
+    layer_tracer, layer_batches = b.tracer, b.listener.batches
+    b.tracer, b.listener.batches = Tracer(layer_tracer.run_id), {}
+    b.tracer.attach(b.spark)
+    walls: dict[bool, list[float]] = {True: [], False: []}
+    for j, traced in enumerate((None, True, False, False, True)):
+        b.trace(bool(traced))
+        wall, _ = checked_drain(b, raw, f"short{j}", catalog, truth)
+        if wall is not None and traced is not None:
+            walls[traced].append(wall)
+    b.trace(False)
+    b.tracer, b.listener.batches = layer_tracer, layer_batches
+    if walls[True] and walls[False]:
+        untraced = _median(walls[False])
+        b.layer["overhead_pct"] = 100.0 * (_median(walls[True]) / untraced - 1.0)
+        b.layer["speedup"] = scaling(b, raw, catalog) / untraced
+    truth.close()
+
+
+def drain(b: Bench, raw: str, d: str, catalog: str) -> float:
+    """Ingest the backlog in ``raw`` into new tables under ``d``, then
+    batch silver and gold; returns the wall."""
+    bronze, silver, gold_root = (os.path.join(d, x) for x in ("bronze", "silver", "gold"))
+    t0 = time.perf_counter()
+    b.ingest(raw, bronze, os.path.join(d, "ckpt"))
+    b.silver_batch(bronze, silver, catalog)
+    b.gold(silver, gold_root)
+    return time.perf_counter() - t0
+
+
+def checked_drain(
+    b: Bench, raw: str, name: str, catalog: str, truth: Truth, heap: bool = False
+) -> tuple:
+    """One drain, its output check and, with ``heap``, its retained heap;
+    returns (wall, or None if it failed; MB the session had cached when
+    gold finished). Every drain is a catch-up of its own: the silver
+    that ``build_gold`` leaves cached is counted, then dropped, so that
+    the next drain does not start with the caches of all before it."""
+    d = os.path.join(WORK, name)
+    cached_mb = 0.0
+    try:
+        wall = drain(b, raw, d, catalog)
+        cached_mb = _cached_mb(b.spark)
+        if heap:
+            b.retained_heap()
+        errs = output_errors(os.path.join(d, "silver"), os.path.join(d, "gold"), truth, 0)
+    except Exception:
+        traceback.print_exc()
+        wall, errs = None, ["exception"]
+    b.spark.catalog.clearCache()
+    return (wall if b.record(name, errs) else None), cached_mb
 
 
 def traced_extras(b: Bench, drain: str, catalog: str, want: dict) -> None:
@@ -450,13 +498,6 @@ def traced_extras(b: Bench, drain: str, catalog: str, want: dict) -> None:
         catalog,
     )
     b.trace(False)
-
-
-def _traced(b: Bench, op: int) -> bool:
-    """In the traced run, operation 0 warms the JVM up; the others are
-    traced and untraced in ABBA order, so that the warm-up still going on
-    does not bias the difference, the tracing overhead."""
-    return bool(b.args.trace) and op > 0 and (op - 1) % 4 in (0, 3)
 
 
 def _cached_mb(spark) -> float:
@@ -552,12 +593,7 @@ def silver_steps(b: Bench, bronze_path: str, catalog_path: str) -> dict:
 def scaling(b: Bench, raw: str, catalog: str) -> float:
     """Wall of one untraced drain on ``local[1]``."""
     b.boot(cpus=1)
-    d = os.path.join(WORK, "local1")
-    t0 = time.perf_counter()
-    b.ingest(raw, os.path.join(d, "bronze"), os.path.join(d, "ckpt"))
-    b.silver_batch(os.path.join(d, "bronze"), os.path.join(d, "silver"), catalog)
-    b.gold(os.path.join(d, "silver"), os.path.join(d, "gold"))
-    return time.perf_counter() - t0
+    return drain(b, raw, os.path.join(WORK, "local1"), catalog)
 
 
 def run_dashboard(b: Bench) -> dict:
@@ -571,31 +607,31 @@ def run_dashboard(b: Bench) -> dict:
     b.boot()
     events = m["parts"][0]["events"]
     per_query: dict[str, list[float]] = {q: [] for q in QUERIES}
-    rounds, untraced_rounds, cur = [], [], 0.0
+    rounds, untraced_rounds = [], []
     t_end = time.perf_counter() + b.args.seconds
-    i = 0
-    while i < MIN_OPS["dashboard"] or time.perf_counter() < t_end or i % len(QUERIES):
-        name = QUERIES[i % len(QUERIES)]
-        rnd = i // len(QUERIES)
-        traced = _traced(b, rnd)
+    rnd = 0
+    while rnd < MIN_OPS["dashboard"] or time.perf_counter() < t_end:
+        # in the traced run, rounds after the cold first one are traced
+        # and untraced in ABBA order, so that the warm-up over the run
+        # does not bias the difference, the tracing overhead
+        traced = bool(b.args.trace) and rnd > 0 and (rnd - 1) % 4 in (0, 3)
         b.trace(traced)
-        try:
-            got, ms = b.query(name, m["silver"], m["gold"], want)
-            errs = check_query(name, got, want)
-        except Exception:
-            traceback.print_exc()
-            ms, errs = None, ["exception"]
-        if b.record(f"query {i} {name}", errs):
-            per_query[name].append(ms)
-            cur += ms
-        if name == QUERIES[-1]:
-            b.retained_heap()
-            if traced or not b.args.trace and rnd >= WARMUP_ROUNDS:
-                rounds.append(cur / 1000.0)
-            elif b.args.trace and rnd > 0:
-                untraced_rounds.append(cur / 1000.0)
-            cur = 0.0
-        i += 1
+        cur, ok = 0.0, True
+        for name in QUERIES:
+            try:
+                got, ms = b.query(name, m["silver"], m["gold"], want)
+                errs = check_query(name, got, want)
+            except Exception:
+                traceback.print_exc()
+                ms, errs = None, ["exception"]
+            if b.record(f"round {rnd} {name}", errs):
+                cur += ms
+                per_query[name].append(ms)
+            ok = ok and not errs
+        b.retained_heap()
+        if ok and not (b.args.trace and rnd == 0):
+            (rounds if traced or not b.args.trace else untraced_rounds).append(cur / 1000.0)
+        rnd += 1
     b.trace(False)
     if b.args.trace:
         b.layer["overhead_pct"] = 100.0 * (_median(rounds) / _median(untraced_rounds) - 1.0)
