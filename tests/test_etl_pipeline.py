@@ -5,6 +5,7 @@ a no-op (exactly-once)."""
 
 from __future__ import annotations
 
+import os
 import tempfile
 
 from big_data_for_smart_houses_spark.plans import (
@@ -61,6 +62,70 @@ def test_end_to_end_etl(spark, telemetry_fixture, catalog_fixture):
         "device_health_metrics",
         "daily_business_summary",
     }
+
+
+def _cached_rdds(spark) -> set[int]:
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def _rows_on_disk(path: str) -> int:
+    """Row count of every parquet part file under ``path``, read from
+    the footers, so no session cache can answer it."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    return sum(
+        pq.ParquetFile(f).metadata.num_rows
+        for f in glob.glob(f"{path}/**/part-*.parquet", recursive=True)
+    )
+
+
+def test_gold_sees_new_silver_batches_in_one_session(
+    spark, telemetry_fixture, catalog_fixture
+):
+    """A long-lived session (the scheduled hourly pipeline) reruns gold
+    after each incremental silver batch. Every rerun must read the
+    silver now on disk, batch_id=1 included, and must leave nothing
+    cached behind it."""
+    # the session is shared: other tests' caches and local checkpoints
+    # may still be held, so assert that gold adds none
+    held = _cached_rdds(spark)
+    with tempfile.TemporaryDirectory() as tmp:
+        bronze_path = f"{tmp}/bronze"
+        silver_path = f"{tmp}/silver"
+        gold_root = f"{tmp}/gold"
+        catalog_path = f"{tmp}/catalog.csv"
+        catalog_fixture.toPandas().to_csv(catalog_path, index=False)
+
+        def land(bronze):
+            write_partitioned(
+                bronze.withColumn("event_date", F.to_date("timestamp")),
+                bronze_path,
+                partition_col="event_date",
+            )
+            run_bronze_to_silver_incremental(
+                spark, bronze_path, silver_path, f"{tmp}/ckpt", catalog_path
+            )
+
+        def gold_readings():
+            run_silver_to_gold(spark, silver_path, gold_root)
+            assert _cached_rdds(spark) <= held
+            daily = spark.read.parquet(f"{gold_root}/daily_energy_consumption")
+            return daily.agg(F.sum("total_readings")).first()[0]
+
+        land(telemetry_fixture)
+        assert gold_readings() == _rows_on_disk(silver_path) == 6
+        # the same readings a day later: a second incremental batch
+        next_day = telemetry_fixture.withColumns(
+            {
+                c: F.regexp_replace(c, "^2025-07-20", "2025-07-21")
+                for c in ("timestamp", "ingestion_time")
+            }
+        )
+        land(next_day)
+        assert sorted(os.listdir(silver_path)) == ["batch_id=0", "batch_id=1"]
+        assert gold_readings() == _rows_on_disk(silver_path) == 12
 
 
 def test_cli_parser_smoke():
