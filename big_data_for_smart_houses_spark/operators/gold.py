@@ -198,26 +198,3 @@ def daily_business_summary(
     if with_created_at:
         cols.append(F.current_timestamp().alias("created_at"))
     return out.select(*cols)
-
-
-def build_gold(silver: DataFrame) -> dict[str, DataFrame]:
-    """The three gold tables as lazy frames over ``silver`` (the
-    reference reads the silver frame once and feeds all three,
-    consumer/silver_to_gold.py:314-348).
-
-    ``silver`` is not cached: a cache would hold the full-width silver
-    rows in the block manager after the call returns, since nothing
-    owns its release, and later reads of the same path would be
-    answered from it, so new silver batches would never reach gold.
-    Uncached, each aggregate scans only the columns it uses. A writer
-    of all three tables should build the summary from the written A1/A2
-    snapshots, as ``plans.etl.run_silver_to_gold`` does: the summary
-    frame here re-aggregates both tables from silver."""
-    daily = daily_energy_consumption(silver)
-    health = device_health_metrics(silver)
-    summary = daily_business_summary(daily, health)
-    return {
-        "daily_energy_consumption": daily,
-        "device_health_metrics": health,
-        "daily_business_summary": summary,
-    }
